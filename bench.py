@@ -16,7 +16,7 @@ import os
 import time
 
 from matrixone_spark.queries import load_all
-from matrixone_spark.session import get_spark
+from matrixone_spark.session import ensure_sql_surface, get_spark
 
 # Queries tagged "bench" are the headline set; keep them scan/join/agg heavy.
 BENCH_TAG = "bench"
@@ -53,8 +53,9 @@ def main() -> None:
     # first Arrow job in a process pays ~1.5-2 s of worker launch + runner
     # init, a per-process constant that otherwise lands on whichever Python-
     # path query happens to run first and skews its "cold" number.
-    # (mo_conv is the pandas UDF get_spark always registers; mapInArrow
-    # warms the Arrow-batch runner path)
+    # (mo_conv is a pandas UDF of the SQL surface; mapInArrow warms the
+    # Arrow-batch runner path)
+    ensure_sql_surface(spark)
     spark.sql("SELECT mo_conv('ff', 16, 10)").collect()
     spark.range(1000).mapInArrow(lambda it: it, "id long").count()
 

@@ -141,9 +141,11 @@ def curate(
     import duckdb
 
     from matrixone_spark.mysql_dialect import translate
-    from matrixone_spark.session import get_spark
+    from matrixone_spark.session import ensure_sql_surface, get_spark
 
     spark = get_spark("bvt-curate")
+    # _validate counts any Spark failure as spark_fail
+    ensure_sql_surface(spark)
     con = duckdb.connect()
     seen: "set[str]" = set()
     numeric: "list[tuple[str, str]]" = []  # (source_file, expr)

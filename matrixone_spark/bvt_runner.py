@@ -44,6 +44,7 @@ from matrixone_spark.mysql_dialect import (
     translate,
     unmask_literals,
 )
+from matrixone_spark.session import ensure_sql_surface
 
 # MySQL column type → Spark SQL type
 _TYPE_MAP = [
@@ -990,6 +991,10 @@ class BvtSession:
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
+        # MySQL errors are replay OUTPUT here, so a function left unresolved
+        # for want of the surface would grade as a reference error: register
+        # it up front instead of on first miss
+        ensure_sql_surface(spark)
         # replay-wide TIME normalizer (CAST(x AS TIME(n)) rewrites and
         # UPDATE store coercion call it by name)
         from pyspark.sql.types import StringType as _St

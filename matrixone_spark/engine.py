@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from matrixone_spark.catalog import Catalog
-from matrixone_spark.session import get_spark
+from matrixone_spark.session import get_spark, with_sql_surface
 
 
 class Engine:
@@ -40,10 +40,10 @@ class Engine:
         ``?``) — the batch analogue of the reference's PREPARE/EXECUTE
         surface (pkg/frontend/session.go:793 plan cache; SURVEY §3.2: Spark
         needs no plan cache, parameter binding covers the semantics).
+        The MySQL SQL-text surface (mo_*, st_*, …) is registered on the
+        session the first time a query names one of its functions.
         """
-        if args is not None:
-            return self.spark.sql(query, args)
-        return self.spark.sql(query)
+        return with_sql_surface(self.spark, lambda: self.spark.sql(query, args))
 
     def mysql_sql(self, query: str, args: "dict | list | None" = None) -> DataFrame:
         """Run MySQL-dialect SQL: translates the known pattern divergences

@@ -8,7 +8,8 @@ surface: pkg/sql/plan/function/func_geo*.go (st_* registrations in
 function_id.go); semantics are the geomlib clean-room kernels already
 oracle-gated by the geofull batteries.
 
-Registration is idempotent (session-tagged), mirroring sql_udfs.register_all.
+Registered on first use by ``matrixone_spark.session.ensure_sql_surface``,
+alongside sql_udfs.register_all.
 
 Arity: Spark SQL UDFs are fixed-arity, MySQL's geo functions are not —
 translate() pads optional trailing arguments with NULL (GEO_SQL_ARITY),
@@ -425,6 +426,14 @@ _SPEC: "dict[str, tuple[object, int, object]]" = {
 # registered arity (Spark SQL UDFs are fixed-arity, MySQL's are not)
 GEO_SQL_ARITY = {name: spec[1] for name, spec in _SPEC.items()}
 
+# MySQL names that Spark also defines as GEOMETRY-typed built-ins. The
+# surface is registered on first use, so a plain-named UDF would lose to the
+# built-in on a session without it (geometries here are EWKT strings); these
+# register mo_-prefixed and translate() applies the rename.
+GEO_SQL_RENAMES = {
+    name: f"mo_{name}" for name in ("st_asbinary", "st_geomfromwkb", "st_srid")
+}
+
 # process-local count of swallowed kernel exceptions (executor-side in
 # local mode); lets tests distinguish intentional NULL rows from bugs.
 _KERNEL_ERRORS = [0]
@@ -477,17 +486,8 @@ def _make_udf(rettype, arity, kernel):
 
 
 def register_geo_sql(spark) -> None:
-    """Register every st_* SQL UDF on the session (idempotent)."""
-    tag = "_mospark_geo_sql_registered"
-    jconf = spark.conf
-    try:
-        if jconf.get(f"spark.{tag}", None) == "1":
-            return
-    except Exception:
-        pass
+    """Register every st_* SQL UDF on the session (called once per session
+    by session.ensure_sql_surface)."""
     for name, (rettype, arity, kernel) in _SPEC.items():
-        spark.udf.register(name, _make_udf(rettype, arity, kernel))
-    try:
-        jconf.set(f"spark.{tag}", "1")
-    except Exception:
-        pass
+        spark.udf.register(GEO_SQL_RENAMES.get(name, name),
+                           _make_udf(rettype, arity, kernel))

@@ -4,7 +4,7 @@ co-executor (test/distributed/cases/geo/geo_s2h3.sql; wrappers
 func_s2h3.go:300-616).
 
 Everything here is an Arrow-batched pandas UDF with a fixed SQL arity,
-registered by ``matrixone_spark.session.get_spark`` → ``_ensure_sql_udfs``.
+registered on first use by ``matrixone_spark.session.ensure_sql_surface``.
 Variadic reference signatures are normalized by the dialect layer:
 ``h3_h3index(p)`` → ``h3_h3index(p, 15)`` and ``h3_h3index_parent(c)`` →
 ``h3_h3index_parent(c, -1)`` (-1 = immediate parent). GEOMETRY values are

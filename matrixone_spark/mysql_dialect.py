@@ -3317,20 +3317,28 @@ def rewrite_repeat_clamp(masked: str, engine: str = "spark") -> str:
 
 
 def _pad_geo_args(masked: str) -> str:
-    """Pad st_* calls with trailing NULLs to the registered UDF arity.
+    """Pad st_* calls with trailing NULLs to the registered UDF arity, and
+    route the names Spark also has as built-ins to their mo_st_*
+    registrations (geo_sql.GEO_SQL_RENAMES).
 
     MySQL's geo functions take optional arguments (st_geomfromtext(wkt[,
     srid]), st_buffer(g, d[, quads])); Spark SQL UDF registration is
     fixed-arity, so geo_sql registers the max form and kernels treat
     trailing NULLs as omitted. Fixpoint: one _rewrite_calls pass skips
     calls nested inside a rewritten outer call."""
-    from matrixone_spark.functions.geo_sql import GEO_SQL_ARITY
+    from matrixone_spark.functions.geo_sql import GEO_SQL_ARITY, GEO_SQL_RENAMES
 
     def build(name, args):
         n = GEO_SQL_ARITY.get(name.lower())
-        if n is None or len(args) >= n or (len(args) == 1 and not args[0].strip()):
+        if n is None:
             return None
-        return f"{name}(" + ", ".join(args + ["NULL"] * (n - len(args))) + ")"
+        target = GEO_SQL_RENAMES.get(name.lower(), name)
+        if len(args) == 1 and not args[0].strip():
+            args = []
+        pad = ["NULL"] * (n - len(args)) if args else []
+        if target == name and not pad:
+            return None
+        return f"{target}(" + ", ".join(args + pad) + ")"
 
     prev = None
     while prev != masked:

@@ -28,6 +28,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from matrixone_spark.session import with_sql_surface
+
 
 @dataclass(frozen=True)
 class Query:
@@ -44,12 +46,13 @@ REGISTRY: "dict[str, Query]" = {}
 def register(name: str, oracle: "str | None", tags: tuple = (), doc: str = ""):
     """Decorator: register a (spark, sf_dir) -> DataFrame callable.
 
-    The stored callable self-registers the SQL-text UDF surface (mo_*, h3_*,
-    …) on whatever session it is handed: the driver contract supplies an
-    ARBITRARY SparkSession, not our get_spark one, so a translate-based
-    query must never assume the session was pre-provisioned (round-4 red
-    row: UNRESOLVED_ROUTINE mo_conv). _ensure_sql_udfs is a per-session-id
-    no-op after the first call, so this costs nothing on the hot path."""
+    The stored callable provisions the SQL-text UDF surface (mo_*, h3_*, …)
+    on whatever session it is handed, on first use: ``queries()`` callers
+    may pass an ARBITRARY SparkSession, so a translate-based query must never
+    assume the session was pre-provisioned (UNRESOLVED_ROUTINE mo_conv on a
+    foreign session). ``with_sql_surface`` registers the surface only when the
+    build fails to resolve a function, so queries that name none of them
+    never pay for it."""
 
     def deco(fn):
         if name in REGISTRY:
@@ -57,10 +60,7 @@ def register(name: str, oracle: "str | None", tags: tuple = (), doc: str = ""):
 
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from matrixone_spark.session import _ensure_sql_udfs
-
-            _ensure_sql_udfs(spark)
-            return fn(spark, sf_dir)
+            return with_sql_surface(spark, lambda: fn(spark, sf_dir))
 
         REGISTRY[name] = Query(name=name, fn=wrapped, oracle=oracle, tags=tags, doc=doc)
         return fn

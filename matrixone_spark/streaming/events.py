@@ -171,6 +171,13 @@ def run_cdc_sink(
     foreachBatch gives per-micro-batch batch-DataFrame semantics, so the same
     sink code could MERGE into anything (JDBC, Delta); parquet append here.
     """
+    if transform is not None:
+        # a transform's analysis error would surface as a StreamingQueryException
+        # from the stream thread, which with_sql_surface cannot retry; the
+        # stream runs on a clone of ``spark`` and inherits its functions
+        from matrixone_spark.session import ensure_sql_surface
+
+        ensure_sql_surface(spark)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         out = transform(batch_df) if transform else batch_df

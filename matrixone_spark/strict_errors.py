@@ -1100,7 +1100,9 @@ def _probe(sess, sql: str) -> bool:
     """True when ``sql`` (a LIMIT-1 existence probe) returns a row.
     Memoized per table-state version (bvt_runner bumps _state_ver on every
     _register) so repeated reads between DMLs cost one Spark job, not one
-    per statement."""
+    per statement. A failed probe reads as "no row"; ``sess`` is a
+    BvtSession, whose constructor registers the SQL surface, so a missing
+    function is never the reason."""
     ver = getattr(sess, "_state_ver", None)
     cache = getattr(sess, "_probe_cache", None)
     if cache is None or cache.get("__ver") != ver:

@@ -10,7 +10,7 @@ import pytest
 
 from matrixone_spark.oracle import compare_frames, run_oracle
 from matrixone_spark.queries import load_all
-from matrixone_spark.session import get_spark
+from matrixone_spark.session import ensure_sql_surface, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -19,6 +19,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     s = get_spark("mospark-tests")
+    # several suites run spark.sql(translate(...)) on this session directly,
+    # outside the engine entry points that provision the surface themselves
+    ensure_sql_surface(s)
     yield s
 
 
