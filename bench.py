@@ -17,6 +17,7 @@ import time
 
 from matrixone_spark.queries import load_all
 from matrixone_spark.session import ensure_sql_surface, get_spark
+from tools.ab_bench import total_executor_runtime_ms
 
 # Queries tagged "bench" are the headline set; keep them scan/join/agg heavy.
 BENCH_TAG = "bench"
@@ -91,17 +92,7 @@ def main() -> None:
     # to -1 (never fail the bench over a metrics read).
     def _ert_ms() -> int:
         try:
-            sc = spark.sparkContext
-            store = sc._jsc.sc().statusStore()
-            gw, jvm = sc._gateway, sc._jvm
-            seq = store.stageList(
-                jvm.java.util.ArrayList(), False, False,
-                gw.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
-            )
-            it, total = seq.iterator(), 0
-            while it.hasNext():
-                total += it.next().executorRunTime()
-            return total
+            return total_executor_runtime_ms(spark)
         except Exception:  # noqa: BLE001 — metrics must never break timing
             return -1
 

@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from matrixone_spark.session_cache import cached
+
 # Driver-provided tables (TESTDATA.md). One parquet per table at sf dirs.
 TABLES: tuple[str, ...] = (
     "region",
@@ -62,13 +64,6 @@ def _fix_nanos_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
-# Shared across Catalog instances: the driver sweep constructs a fresh
-# Catalog per query; re-reading parquet footers 100+ times is pure waste.
-# Keyed by applicationId (stable for a session's lifetime, never reused by a
-# later session the way id(spark) can be after GC) + sf_dir + table name.
-_TABLE_CACHE: "dict[tuple[str, str, str], DataFrame]" = {}
-
-
 # Correctness-critical session confs that are runtime-settable. The round
 # driver calls queries() with ITS OWN SparkSession (not ours) — without
 # nanosAsLong the events table is unreadable, and without UTC the timestamp
@@ -91,14 +86,18 @@ def ensure_session_confs(spark: SparkSession) -> None:
 
 
 class Catalog:
-    """Name → DataFrame registry over a scale-factor directory."""
+    """Name → DataFrame registry over a scale-factor directory.
+
+    A registry sweep constructs a fresh Catalog per query, so the table
+    frames live in one map per (session, ``sf_dir``) shared by every Catalog
+    on that session: footers are read once, and a view registered through a
+    frame lands on the caller's session."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         ensure_session_confs(spark)
         self.spark = spark
         self.sf_dir = sf_dir
-        self._cache = _TABLE_CACHE
-        self._key = (spark.sparkContext.applicationId, sf_dir)
+        self._tables: "dict[str, DataFrame]" = cached(spark, "catalog", sf_dir, dict)
 
     def path(self, name: str) -> str:
         p = os.path.join(self.sf_dir, f"{name}.parquet")
@@ -111,8 +110,8 @@ class Catalog:
         raise FileNotFoundError(f"table {name!r} not found under {self.sf_dir}")
 
     def table(self, name: str) -> DataFrame:
-        key = (*self._key, name)
-        if key not in self._cache:
+        df = self._tables.get(name)
+        if df is None:
             from matrixone_spark.sources.layout_cache import split_layout_path
 
             path = self.path(name)
@@ -121,9 +120,9 @@ class Catalog:
             # scan of it is one task; rewrite once into a clustered
             # multi-file copy and scan that. No-op for directory tables.
             split = split_layout_path(path, name)
-            df = self.spark.read.parquet(split or path)
-            self._cache[key] = _fix_nanos_timestamps(df)
-        return self._cache[key]
+            df = _fix_nanos_timestamps(self.spark.read.parquet(split or path))
+            self._tables[name] = df
+        return df
 
     def register_views(self) -> None:
         """Register every table as a temp view so ``spark.sql`` sees them."""

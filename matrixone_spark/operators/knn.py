@@ -124,7 +124,7 @@ class IvfIndex:
             .drop("_features")
         )
         # At scale: .repartition("centroid_id").write.partitionBy("centroid_id")
-        # so a probe scans only its buckets; cached here for local use.
+        # so a probe scans only its buckets; here they stay a lazy plan.
         centroids = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
         return cls(centroids, assignments, emb_col, id_col)
 

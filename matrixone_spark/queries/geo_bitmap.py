@@ -16,36 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from collections import OrderedDict
-
 from matrixone_spark.catalog import Catalog
 from matrixone_spark.functions import geo as G
 from matrixone_spark.queries import register
-
-# (app id, sf_dir) → persisted cell-annotated point set for the S2 bench
-# join. Bounded LRU with unpersist-on-evict (same discipline as the
-# fulltext index cache): the two join branches then share one Arrow-batched
-# S2 cell computation instead of re-running it per branch.
-_S2_BASE_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-_S2_BASE_CACHE_MAX = 4
-
-
-def _s2_bench_base(spark, sf_dir: str, build) -> DataFrame:
-    """``build`` is a thunk returning the frame to persist — lazy so a warm
-    cache hit skips the whole plan construction (r13, guide §5 driver work:
-    the eager form built ~500 py4j calls of pts+S2-bucket expressions per
-    invocation only to discard them on the cache hit)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _S2_BASE_CACHE.get(key)
-    if cached is None:
-        cached = build().persist()
-        _S2_BASE_CACHE[key] = cached
-        while len(_S2_BASE_CACHE) > _S2_BASE_CACHE_MAX:
-            _, old = _S2_BASE_CACHE.popitem(last=False)
-            old.unpersist(blocking=False)
-    else:
-        _S2_BASE_CACHE.move_to_end(key)
-    return cached
+from matrixone_spark.session_cache import cached
 
 
 @register(
@@ -728,10 +702,10 @@ def geo_s2_join_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cold path pays a single Python-worker launch on the scan's natural
     # partitioning; the bucket equi-join's shuffle then spreads the verify
     # across all cores. Both join branches read the same persisted frame.
-    # Bounded cache keyed by (app, sf_dir) — at 100 TB this is the table
-    # you'd write out partitioned by cell; persisting the annotated points
-    # is the in-session analogue. Built lazily: a warm cache hit skips the
-    # pts + S2-bucket plan construction entirely.
+    # Session cache keyed by sf_dir — at 100 TB this is the table you'd
+    # write out partitioned by cell; persisting the annotated points is the
+    # in-session analogue. Built lazily: a warm cache hit skips the pts +
+    # S2-bucket plan construction entirely (~500 py4j calls).
     def _build() -> DataFrame:
         c = Catalog(spark, sf_dir).table("customer")
         k = F.col("c_custkey")
@@ -743,9 +717,9 @@ def geo_s2_join_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((k % 720).cast("double") / 2.0 - 179.5).alias("lon"),
             ((k % 340).cast("double") / 2.0 - 84.5).alias("lat"),
         )
-        return S2.with_s2_buckets(pts, "lon", "lat", "cell", "buckets", level=5)
+        return S2.with_s2_buckets(pts, "lon", "lat", "cell", "buckets", level=5).persist()
 
-    base = _s2_bench_base(spark, sf_dir, _build)
+    base = cached(spark, "s2_base", sf_dir, _build)
     expanded = base.select(
         F.col("id").alias("id_b"),
         F.col("lon").alias("lon_b"),

@@ -14,6 +14,7 @@ from matrixone_spark.catalog import Catalog
 from matrixone_spark.functions import vector as V
 from matrixone_spark.operators.knn import IvfIndex, IvfPqIndex, LshAnnIndex, knn_exact, knn_join
 from matrixone_spark.queries import register
+from matrixone_spark.session_cache import cached
 
 # Deterministic query vector (shared by Spark and oracle SQL).
 _QVEC = [float(i % 7) / 7.0 for i in range(64)]
@@ -228,16 +229,11 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return idx.search(_QVEC, 10, nprobe=4, refine=8).select("vec_id", "label", "distance")
 
 
-_IVF_CACHE: "dict[tuple[str, str], IvfIndex]" = {}
-
-
 def _ivf_index_cached(spark: SparkSession, sf_dir: str) -> "IvfIndex":
     # build-once-search-many, same contract as the LSH/IVF-PQ caches below
     # (ivf_create writes the index once; ivf_search probes it — the KMeans
     # fit was being re-run on every probe call)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _IVF_CACHE.get(key)
-    if idx is None:
+    def build() -> "IvfIndex":
         e = Catalog(spark, sf_dir).table("embeddings")
         # r13 (guide §2.4 — fewer driver rounds): max_iter 20→5. Each KMeans
         # iteration is a synchronous driver job; on this corpus the fit never
@@ -245,40 +241,31 @@ def _ivf_index_cached(spark: SparkSession, sf_dir: str) -> "IvfIndex":
         # (probe: k=8 fit 12.6 s → 2.6 s). Recall vs exact KNN stays ≥0.9
         # (pytest-gated, tests/test_vector.py) — the reference contract for
         # approx indexes is recall, not a fixed iteration count.
-        idx = IvfIndex.build(e, "embedding", "vec_id", n_centroids=8, max_iter=5)
-        _IVF_CACHE[key] = idx
-    return idx
+        return IvfIndex.build(e, "embedding", "vec_id", n_centroids=8, max_iter=5)
 
-
-_IVFPQ_CACHE: "dict[tuple[str, str], IvfPqIndex]" = {}
+    return cached(spark, "ivf", sf_dir, build)
 
 
 def _ivfpq_index_cached(spark: SparkSession, sf_dir: str) -> "IvfPqIndex":
     # build-once-search-many (ivfpq_create writes the index table once;
-    # ivfpq_search probes it) — keyed like the LSH cache below
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _IVFPQ_CACHE.get(key)
-    if idx is None:
+    # ivfpq_search probes it); an evicted index unpersists its code table
+    def build() -> "IvfPqIndex":
         e = Catalog(spark, sf_dir).table("embeddings")
         # r13: max_iter 20→5 (same rationale as _ivf_index_cached above; this
         # build runs 9 fits — 1 coarse + m=8 subspaces — so iteration count
         # dominates the 37 s cold build). Recall gate ≥0.9 in tests.
-        idx = IvfPqIndex.build(e, "embedding", "vec_id", nlist=8, m=8, ksub=16, max_iter=5)
-        _IVFPQ_CACHE[key] = idx
-    return idx
+        return IvfPqIndex.build(e, "embedding", "vec_id", nlist=8, m=8, ksub=16, max_iter=5)
 
-
-_LSH_CACHE: "dict[tuple[str, str], LshAnnIndex]" = {}
+    return cached(spark, "ivfpq", sf_dir, build)
 
 
 def _lsh_index_cached(spark: SparkSession, sf_dir: str) -> "LshAnnIndex":
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _LSH_CACHE.get(key)
-    if idx is None:
+    # an evicted index unpersists its hashed table
+    def build() -> "LshAnnIndex":
         e = Catalog(spark, sf_dir).table("embeddings")
-        idx = LshAnnIndex.build(e, "embedding", "vec_id", bucket_length=2.0, num_tables=8)
-        _LSH_CACHE[key] = idx
-    return idx
+        return LshAnnIndex.build(e, "embedding", "vec_id", bucket_length=2.0, num_tables=8)
+
+    return cached(spark, "lsh", sf_dir, build)
 
 
 @register(

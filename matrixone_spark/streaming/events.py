@@ -22,6 +22,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from matrixone_spark.session_cache import cached
+
 # State-store partition count for the bounded availableNow drains (r12 perf).
 # Structured Streaming pins the stateful operator's partitioning — and
 # therefore the number of state-store instances, each paying provider init +
@@ -35,10 +37,6 @@ from pyspark.sql import functions as F
 # via the same env knob; the local default 8 matches the harness's KB-scale
 # state while still exercising multi-partition state-store commit paths.
 _STATE_PARTITIONS = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-
-
-# appId -> isolated SparkSession for bounded streaming drains.
-_STREAM_SESSION: "dict[str, SparkSession]" = {}
 
 
 def _stream_session(spark: SparkSession) -> SparkSession:
@@ -62,26 +60,19 @@ def _stream_session(spark: SparkSession) -> SparkSession:
     session; any query planned concurrently on that session during the window
     silently picked up the streaming shuffle-partition count (r12 advice).
     A child session has its own SQLConf, so batch work on the caller's
-    session is never affected; one child per application, reused across
-    drains. Correctness confs (UTC, nanosAsLong) are re-applied on the child
-    by Catalog's ensure_session_confs when the stream source is built.
+    session is never affected; one child per caller session, kept in the
+    caller's session cache and reused across drains. Correctness confs (UTC,
+    nanosAsLong) are re-applied on the child by Catalog's
+    ensure_session_confs when the stream source is built.
     """
-    key = spark.sparkContext.applicationId
-    ss = _STREAM_SESSION.get(key)
-    if ss is None:
+
+    def build() -> SparkSession:
         ss = spark.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
         ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-        _STREAM_SESSION[key] = ss
-        if len(_STREAM_SESSION) > 4:  # stale appIds from restarted tests
-            for k in list(_STREAM_SESSION)[:-4]:
-                del _STREAM_SESSION[k]
-    return ss
+        return ss
 
-
-# (appId, path) -> parquet schema: footer-sniffing costs a driver job per
-# readStream construction; the schema is immutable for a given file set.
-_SCHEMA_CACHE: "dict[tuple[str, str], object]" = {}
+    return cached(spark, "stream_session", None, build)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,11 +82,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = Catalog(spark, sf_dir)
     path = cat.path("events")
-    skey = (spark.sparkContext.applicationId, path)
-    batch_schema = _SCHEMA_CACHE.get(skey)
-    if batch_schema is None:
-        batch_schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[skey] = batch_schema
+    # footer-sniffing costs a driver job per readStream construction; the
+    # schema is immutable for a given file set
+    batch_schema = cached(spark, "stream_schema", path, lambda: spark.read.parquet(path).schema)
     reader = spark.readStream.schema(batch_schema).format("parquet")
     if os.path.isfile(path):
         # file-source streams need a directory: stream the parent dir with a

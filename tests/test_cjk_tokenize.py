@@ -245,14 +245,3 @@ def test_real_public_userdict():
     prefix, logtotal = build_prefix_dict(merged)
     assert cut_dag("云计算区块链", prefix, logtotal) == ["云计算", "区块链"]
 
-
-def test_nl_multitoken_model_decision():
-    """NL multi-token scoring model pinned EMPIRICALLY against the
-    reference's own goldens (round-8 count over fulltext/gojieba +
-    fulltext + fulltext2 + fulltext_bm25): positional PHRASE
-    (patternToSql SqlPhrase, pkg/fulltext/sql.go:577) fails 14 golden
-    rows; bag-of-words fails 24. Phrase wins and stays the default; the
-    env knob FULLTEXT_NL_MODEL exists to re-count."""
-    from matrixone_spark.operators import fulltext as ft
-
-    assert ft.NL_MULTI_MODEL == "phrase"

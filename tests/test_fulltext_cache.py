@@ -1,11 +1,13 @@
-"""FullTextIndex build cache: bounded LRU with unpersist-on-evict (a
-long-lived session building many corpora must not leak executor storage)."""
+"""FullTextIndex build cache through the session cache: bounded LRU with
+unpersist-on-evict (a long-lived session building many corpora must not leak
+executor storage)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
+from matrixone_spark import session_cache
+from matrixone_spark.catalog import Catalog
 from matrixone_spark.operators import fulltext as ft
+from tests.conftest import SF_DIR
 
 
 def _corpus(spark, seed: int):
@@ -15,16 +17,15 @@ def _corpus(spark, seed: int):
     )
 
 
-def test_cache_bounded_and_evicts_persisted(spark):
-    ft._INDEX_CACHE.clear()
-    old_max = ft._INDEX_CACHE_MAX
-    ft._INDEX_CACHE_MAX = 3
+def test_cache_bounded_and_evicts_persisted(spark, monkeypatch):
+    monkeypatch.setattr(session_cache, "MAX_ENTRIES", 3)
+    fresh = spark.newSession()
+    # reuse the same DataFrame objects, as Catalog's table map does — the
+    # cache key is the corpus' semantic hash
+    corpora = [_corpus(fresh, s) for s in range(5)]
+    indexes = [ft.FullTextIndex.build_cached(c, "doc_id", "text") for c in corpora]
     try:
-        # reuse the same DataFrame objects, as Catalog's table cache does —
-        # the cache key is the corpus' semantic hash
-        corpora = [_corpus(spark, s) for s in range(5)]
-        indexes = [ft.FullTextIndex.build_cached(c, "doc_id", "text") for c in corpora]
-        assert len(ft._INDEX_CACHE) == 3
+        assert session_cache.cache_stats()["fulltext"]["entries"] == 3
         # oldest two evicted AND their postings no longer persisted
         for idx in indexes[:2]:
             assert not idx.postings.storageLevel.useMemory
@@ -34,24 +35,33 @@ def test_cache_bounded_and_evicts_persisted(spark):
         assert again is indexes[4]
         assert again.postings.storageLevel.useMemory
     finally:
-        ft._INDEX_CACHE_MAX = old_max
-        for idx in ft._INDEX_CACHE.values():
+        for idx in indexes[2:]:
             idx.unpersist()
-        ft._INDEX_CACHE.clear()
 
 
 def test_cache_hit_returns_same_index(spark):
-    ft._INDEX_CACHE.clear()
+    fresh = spark.newSession()
+    c = _corpus(fresh, 9)
+    a = ft.FullTextIndex.build_cached(c, "doc_id", "text")
     try:
-        c = _corpus(spark, 9)
-        a = ft.FullTextIndex.build_cached(c, "doc_id", "text")
         b = ft.FullTextIndex.build_cached(c, "doc_id", "text")
         assert a is b
-        assert len(ft._INDEX_CACHE) == 1
     finally:
-        for idx in ft._INDEX_CACHE.values():
-            idx.unpersist()
-        ft._INDEX_CACHE.clear()
+        a.unpersist()
+
+
+def test_same_corpus_on_another_session_gets_its_own_index(spark):
+    one, two = spark.newSession(), spark.newSession()
+    n1, n2 = Catalog(one, SF_DIR).table("nation"), Catalog(two, SF_DIR).table("nation")
+    assert n1.semanticHash() == n2.semanticHash()
+    a = ft.FullTextIndex.build_cached(n1, "n_nationkey", "n_name")
+    b = ft.FullTextIndex.build_cached(n2, "n_nationkey", "n_name")
+    try:
+        assert a is not b
+        assert b.postings.sparkSession is two
+    finally:
+        a.unpersist()
+        b.unpersist()
 
 
 def test_build_empty_corpus(spark):
